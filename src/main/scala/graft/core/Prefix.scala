@@ -1,96 +1,166 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import java.util.Locale
 
-/** Scale-safe GLOBAL cumulative sums (guide §2, r15 optimization
-  * round): an unpartitioned `Window.orderBy` moves the whole frame to
-  * ONE partition — fine for decile/threshold-sized aggregates, a
-  * single-task corpus sort for row-scale inputs (distinct scores,
-  * distinct event times, vocab weights). This helper computes the same
-  * running sums with a two-pass range-partitioned plan:
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, JoinedRow,
+  SpecificInternalRow, UnsafeProjection}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graft.ExpressionBridge
+import org.apache.spark.sql.types._
+
+/** Scale-safe GLOBAL cumulative sums (guide §2): an unpartitioned
+  * ordered SQL frame moves the whole input to ONE partition — fine for
+  * decile/threshold-sized aggregates, a single-task corpus sort for
+  * row-scale inputs (distinct scores, distinct event times, vocab
+  * weights). This helper computes the same running sums the way dask
+  * `divisions` do: range partitions, a local running sum in each, plus
+  * the totals of the partitions before it.
   *
-  *  1. range-repartition by the order key and pin the layout with ONE
-  *     localCheckpoint (the per-row partition id must be STABLE across
-  *     the two consumers below — a re-executed range exchange may
-  *     sample different boundaries);
-  *  2. per-partition totals (≤ #partitions rows) get their own running
-  *     offsets through a window over that BOUNDED frame (partition
-  *     count is a cluster property, not a data property);
-  *  3. each row's global cumulative sum = its within-partition window
-  *     sum (parallel across partitions) + its partition's offset
-  *     (broadcast-joined back).
+  *  1. project the input and its addends once, `repartitionByRange` by
+  *     the order and sort within partitions; that plan executes ONCE
+  *     (`queryExecution.toRdd`), so its sampled range boundaries and
+  *     its shuffle output are fixed for both passes below;
+  *  2. job 1 collects each partition's addend totals; the driver turns
+  *     them into exclusive offsets in partition order;
+  *  3. a `mapPartitionsWithIndex` over the SAME rows emits each row
+  *     with its within-partition running sum plus its partition's
+  *     offset. Each action on the returned frame reruns only this map
+  *     over the stored shuffle output.
   *
-  * EXACTNESS CONTRACT: the regrouped accumulation is bit-identical to
-  * the sequential fold ONLY for order-insensitive addends — integral
-  * types, or doubles that are exactly integer-valued (counts cast to
-  * double), where IEEE addition below 2^53 is associative. Call sites
-  * feed counts (longs / integer-valued doubles) exclusively; never
-  * route arbitrary float sums through this (their sequential-fold
-  * bits are what generated oracles replay).
+  * No storage block is written: the shuffle files live as long as the
+  * returned frame is referenced.
+  *
+  * EXACTNESS CONTRACT: the regrouped accumulation equals the sequential
+  * fold only when every partial sum is exact — integral addends (summed
+  * as longs; overflow throws), or doubles that are integers (counts
+  * cast to double) whose magnitudes sum below 2^53. Double addends are
+  * checked while the totals are collected, and the job fails, naming
+  * the output column, on a non-finite or fractional value or once the
+  * magnitudes reach 2^53. Other addend types are rejected at plan time.
   *
   * Order keys must be UNIQUE per row (call sites pass groupBy outputs
   * keyed by the order column), so ROWS/RANGE frame semantics coincide.
   */
 object Prefix {
 
+  /** Name prefix of the projected addend columns; inputs may not use it. */
+  private val Internal = "__pv"
+
+  /** 2^53: below it in magnitude, every integer is a double. */
+  private val ExactLimit = 1L << 53
+
   /** Append global running-sum columns over `df` ordered by `order`.
     *
-    * @param df     input frame; order keys unique per row
+    * @param df     input frame; order keys unique per row, no column
+    *               named `__pv*`
     * @param order  global ordering (e.g. `Seq(col("s"))`, descending
     *               via `col("s").desc`)
     * @param sums   (addend, outputName, inclusive): inclusive=true is
     *               ROWS UNBOUNDED PRECEDING..CURRENT ROW, false stops
-    *               at -1 (strict prefix; 0 for the first row)
+    *               at -1 (strict prefix; 0 for the first row). Output
+    *               columns are non-null: long for integral addends,
+    *               double for double addends; null addends count as 0.
     */
   def cumSums(df: DataFrame, order: Seq[Column],
       sums: Seq[(Column, String, Boolean)]): DataFrame = {
     require(sums.nonEmpty, "Prefix.cumSums needs at least one sum")
-    val spark = df.sparkSession
-    val n = spark.sparkContext.defaultParallelism
-    // materialize the addends once so per-partition totals and the
-    // within-partition window sum the IDENTICAL values
-    val vals = sums.zipWithIndex.map { case ((c, _, _), i) =>
-      c.as(s"__pv$i")
+    val names = sums.map(_._2)
+    val reserved = df.columns.filter(_.startsWith(Internal))
+    require(reserved.isEmpty, s"Prefix.cumSums: input column(s) " +
+      s"${reserved.mkString(", ")} use the internal prefix $Internal")
+    val lower = (df.columns ++ names).map(_.toLowerCase(Locale.ROOT))
+    val taken = names.filter(n => lower.count(_ == n.toLowerCase(Locale.ROOT)) > 1)
+    require(taken.isEmpty, s"Prefix.cumSums: output name(s) " +
+      s"${taken.mkString(", ")} already in the input or repeated")
+    val types: Seq[DataType] =
+      df.select(sums.map(_._1): _*).schema.map(_.dataType).zip(names).map {
+        case (ByteType | ShortType | IntegerType | LongType, _) => LongType
+        case (DoubleType, _) => DoubleType
+        case (t, name) => throw new IllegalArgumentException(
+          s"Prefix.cumSums: addend of $name is ${t.simpleString}; " +
+            "it must be integral or double")
+      }
+    val k = df.columns.length
+    val m = sums.length
+    val isLong = types.map(_ == LongType).toArray
+    val inclusive = sums.map(_._3).toArray
+    val labels = sums.map { case (c, name, _) => s"$name (= $c)" }.toArray
+    // rows are reused between next() calls: read or project each one
+    // before advancing, never buffer them
+    val rows = df.select(col("*") +: sums.zip(types).zipWithIndex.map {
+        case (((c, _, _), t), i) => c.cast(t).as(s"$Internal$i")
+      }: _*)
+      .repartitionByRange(df.sparkSession.sparkContext.defaultParallelism,
+        order: _*)
+      .sortWithinPartitions(order: _*)
+      .queryExecution.toRdd
+
+    val parts = rows.mapPartitions { it =>
+      val tot = new Array[Long](m)
+      val mag = new Array[Long](m)
+      it.foreach { row =>
+        var j = 0
+        while (j < m) {
+          val v = addend(row, k, j, isLong, labels)
+          tot(j) = Math.addExact(tot(j), v)
+          if (!isLong(j)) mag(j) = math.min(mag(j) + math.abs(v), ExactLimit)
+          j += 1
+        }
+      }
+      Iterator((tot, mag))
+    }.collect()
+    for (j <- 0 until m if !isLong(j)) {
+      val mag = parts.foldLeft(0L)((a, p) => math.min(a + p._2(j), ExactLimit))
+      if (mag >= ExactLimit) throw new IllegalArgumentException(
+        s"Prefix.cumSums: addend magnitudes of ${labels(j)} sum to 2^53 " +
+          "or more, past exact double arithmetic")
     }
-    // materialize the input ONCE before range partitioning: the range
-    // exchange SAMPLES its child, so feeding it the raw lineage would
-    // execute the (often corpus-rooted) upstream plan twice — once for
-    // the sample, once for the exchange (measured ~1 s per call on the
-    // Mann–Whitney gate). After this checkpoint both passes read cached
-    // partitions.
-    val once = df.select(col("*") +: vals: _*).localCheckpoint()
-    // the range exchange is sampled; the second checkpoint pins
-    // row→partition so the offsets branch and the window branch see
-    // the same layout (a re-executed sampled exchange may pick
-    // different boundaries)
-    val marked = once
-      .repartitionByRange(n, order: _*)
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint()
-    val offs = marked.groupBy("__pid")
-      .agg(sums.indices.map(i => sum(col(s"__pv$i")).as(s"__pt$i")).head,
-        sums.indices.map(i => sum(col(s"__pv$i")).as(s"__pt$i")).tail: _*)
-    // running offsets over the ≤ #partitions frame: bounded by cluster
-    // size, so the single-partition window here is legitimate
-    val wOff = Window.orderBy("__pid")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = sums.indices.foldLeft(offs) { (d, i) =>
-      d.withColumn(s"__po$i", coalesce(sum(col(s"__pt$i")).over(wOff), lit(0)))
-    }.select(col("__pid") +: sums.indices.map(i => col(s"__po$i")): _*)
-    val wLoc = Window.partitionBy("__pid").orderBy(order: _*)
-    val out = sums.zipWithIndex.foldLeft(
-        marked.join(broadcast(offsets), Seq("__pid"))) {
-      case (d, ((_, name, inclusive), i)) =>
-        val frame =
-          if (inclusive) wLoc.rowsBetween(Window.unboundedPreceding, 0)
-          else wLoc.rowsBetween(Window.unboundedPreceding, -1)
-        d.withColumn(name,
-          coalesce(sum(col(s"__pv$i")).over(frame), lit(0)) + col(s"__po$i"))
+    val offsets = parts.map(_._1).scanLeft(new Array[Long](m)) { (acc, t) =>
+      Array.tabulate(m)(j => Math.addExact(acc(j), t(j)))
     }
-    out.drop("__pid")
-      .drop(sums.indices.map(i => s"__pv$i"): _*)
-      .drop(sums.indices.map(i => s"__po$i"): _*)
+
+    // output = the input columns (skipping the addends) + the sums
+    val outTypes = df.schema.map(f => (f.dataType, f.nullable)) ++
+      types.map((_, false))
+    val out = rows.mapPartitionsWithIndex[InternalRow] { (p, it) =>
+      val run = new Array[Long](m)
+      val sumsRow = new SpecificInternalRow(types)
+      val joined = new JoinedRow
+      val proj = UnsafeProjection.create(outTypes.zipWithIndex.map {
+        case ((t, nullable), i) => BoundReference(if (i < k) i else i + m, t, nullable)
+      })
+      it.map { row =>
+        var j = 0
+        while (j < m) {
+          val before = run(j)
+          run(j) = Math.addExact(before, addend(row, k, j, isLong, labels))
+          val s = Math.addExact(offsets(p)(j), if (inclusive(j)) run(j) else before)
+          if (isLong(j)) sumsRow.setLong(j, s) else sumsRow.setDouble(j, s.toDouble)
+          j += 1
+        }
+        proj(joined(row, sumsRow))
+      }
+    }
+    ExpressionBridge.internalCreateDataFrame(df.sparkSession, out,
+      StructType(df.schema.fields ++ names.zip(types).map { case (n, t) =>
+        StructField(n, t, nullable = false)
+      }))
   }
+
+  /** Addend `j` of a projected row (input columns first) as an exact
+    * long; null counts as 0. */
+  private def addend(row: InternalRow, k: Int, j: Int,
+      isLong: Array[Boolean], labels: Array[String]): Long =
+    if (row.isNullAt(k + j)) 0L
+    else if (isLong(j)) row.getLong(k + j)
+    else {
+      val x = row.getDouble(k + j)
+      // NaN fails the first test, so it is rejected with the infinities
+      if (!(math.abs(x) < ExactLimit) || x != math.rint(x))
+        throw new IllegalArgumentException(s"Prefix.cumSums: addend of " +
+          s"${labels(j)} is $x; double addends must be integers below 2^53")
+      x.toLong
+    }
 }

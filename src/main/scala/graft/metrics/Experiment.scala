@@ -192,7 +192,7 @@ object Experiment {
     *
     * Count products evaluate in DOUBLE (BIGINT×BIGINT wraps past 2^63
     * at 100 TB row counts; exact below 2^53). The prefix sum runs over
-    * the tiny value frame only (window whitelisted with that bound).
+    * the value frame only, range-partitioned ([[graft.core.Prefix]]).
     *
     * @param valueCol integral-valued metric expression (cast your
     *   metric to a stable integer grid first — ranks only need order).

@@ -56,11 +56,10 @@ object Survival {
       // IEEE, so dropping them from the fold is bit-identical — the
       // sequential product then runs over the event-duration frame
       // (bounded by distinct durations with deaths; multiplication is
-      // non-associative, so this fold stays order-pinned)
+      // non-associative, so this fold stays order-pinned: the growing
+      // frame updates one running product per row in ascending __t)
       .filter(col("__d") > 0)
-      .withColumn("__surv",
-        round(aggregate(collect_list(col("__f")).over(wSurv),
-          lit(1.0), (acc, x) => acc * x), 6))
+      .withColumn("__surv", round(product(col("__f")).over(wSurv), 6))
       .select(col("__t").as("t"), col("__n").as("n_risk"),
         col("__d").as("n_events"),
         (col("__m") - col("__d")).as("n_censored_at"),
@@ -142,6 +141,14 @@ object Survival {
     * over the ≤|distinct durations| frame. Sums stay unrounded into
     * the final statistics (single-provenance rule); every reported
     * column rounds at the output boundary.
+    *
+    * Covariate contract: the covariate must be INTEGER-valued (a count,
+    * a 0/1 flag), with Σ|x| and Σx² over the corpus below 2^53. The
+    * risk-set sums S1/S2 are [[graft.core.Prefix]] sums of per-duration
+    * double moments, exact only for integer addends; a fractional,
+    * non-finite or too-large covariate fails the query with an
+    * IllegalArgumentException naming `__s1`/`__s2` instead of returning
+    * regrouping-dependent bits.
     */
   def coxOneStep(df: DataFrame, durationCol: String, eventCol: String,
       covariateCol: String): DataFrame = {
@@ -158,11 +165,9 @@ object Survival {
     val dD = col("__d").cast("double")
     val xbar = col("__s1") / s0
     // reverse cumulative risk-set moments as two-pass prefix sums
-    // (guide §2, r15). Exactness note: __sx/__sxx are double sums, so
-    // this relies on the covariate being integer-valued (the declared
-    // gate feeds an event count) — integer-valued doubles accumulate
-    // exactly under any regrouping below 2^53, identical to the old
-    // sequential window fold.
+    // (guide §2). __sx/__sxx are double sums, exact under the
+    // covariate contract above (the declared gate feeds an event
+    // count); Prefix rejects a covariate that breaks it.
     val agg = graft.core.Prefix.cumSums(per, Seq(col("__t").desc),
         Seq((col("__m"), "__s0", true), (col("__sx"), "__s1", true),
           (col("__sxx"), "__s2", true)))

@@ -1,9 +1,11 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types.StructType
 
 /** Minimal accessor for the `private[sql]` Expression⇄Column bridge —
   * the supported extension-library pattern for exposing custom native
@@ -43,6 +45,15 @@ object ExpressionBridge {
   def bloomMightContain(bloom: Column, hashed: Column): Column =
     column(new org.apache.spark.sql.catalyst.expressions
       .BloomFilterMightContain(expression(bloom), expression(hashed)))
+
+  /** A DataFrame over an RDD of rows already in Catalyst's internal
+    * format (`private[sql]` upstream). `rows` may reuse one row object
+    * per task: the scan projects each one before pulling the next.
+    */
+  def internalCreateDataFrame(spark: SparkSession, rows: RDD[InternalRow],
+      schema: StructType): DataFrame =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .internalCreateDataFrame(rows, schema)
 
   /** Register a function builder on an EXISTING session's registry —
     * the runtime-side counterpart of `SparkSessionExtensions

@@ -71,15 +71,9 @@ class PlanRegressionSpec extends SparkSpec {
     "q_source_gini",         // rank window strictly over the ≤|sources|
                              // aggregate frame (Gini needs the ascending
                              // rank), never over the corpus
-    "q_kaplan_meier",        // risk-set reverse cumsum + ordered survival
-                             // product strictly over the ≤|durations|
-                             // aggregate frame, never the corpus
-    "q_logrank",             // the same ≤|durations| risk-set cumsums
-                             // (total + group-A) feeding the
-                             // hypergeometric sums — never the corpus
-    "q_cox_onestep",         // the same ≤|durations| risk-set cumsums
-                             // (S0/S1/S2 covariate moments) feeding the
-                             // score/information sums — never the corpus
+    "q_kaplan_meier",        // ordered survival product strictly over
+                             // the ≤|event durations| aggregate frame,
+                             // never the corpus
     "q_sprt",                // cumulative LLR strictly over the
                              // ≤|days| daily aggregate — the ordered
                              // fold IS the sequential-test semantics
@@ -113,13 +107,6 @@ class PlanRegressionSpec extends SparkSpec {
     "q_ndcg",                // ideal-permutation row_number strictly over
                              // the per-query top-k candidate frame
                              // (|queries|·k rows), never the corpus
-    "q_trend_robust",        // day-index row_number strictly over the
-                             // ≤|days| daily aggregate (Theil–Sen needs
-                             // the integer x axis), never the corpus
-    "q_ab_mannwhitney",      // prefix-sum window strictly over the
-                             // ≤|distinct metric values| frame (the
-                             // rank-free U construction), never the
-                             // corpus
     "q_quantile_sketch"      // two cumulative windows: one over the
                              // ≤|buckets| sketch frame (the read-out),
                              // one over the ≤|distinct prices|
