@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit helper: `runMain graft.Explain <query>[,<query>…] [sfDir]`
   * prints each query's formatted physical plan — the same surface the
   * per-round plan audits and PlanRegressionSpec read. With no args it
@@ -14,12 +12,7 @@ object Explain {
       if (args.isEmpty) SparkEntry.queries.keys.toSeq.sorted
       else args(0).split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>
       println(s"\n========== $name ==========")

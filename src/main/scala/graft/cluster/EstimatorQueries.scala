@@ -62,24 +62,19 @@ object EstimatorQueries extends QueryPack {
     * read a compact cached frame instead of re-decoding parquet.
     * Projection-only — row order and partitioning match the raw scan,
     * so both fits' trajectories are unchanged. Unpersisted by
-    * Memos.clearAll between Bench passes (CachedFrameMap).
+    * Memos.clearAll between Bench passes.
     */
-  private val featMemo = graft.core.Memos.register(new graft.core.Memos.CachedFrameMap())
+  private val featMemo = graft.core.Memos.frames()
   private def kmeansFeatures(s: SparkSession, dir: String): DataFrame =
-    featMemo.computeIfAbsent(dir, _ => {
-      val f = Tables.lineitem(s, dir).select(
-        col("l_orderkey"), col("l_linenumber"),
-        col("l_quantity").cast("double").as("l_quantity"),
-        col("l_extendedprice").cast("double").as("l_extendedprice"),
-        col("l_discount").cast("double").as("l_discount"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      f
-    })
+    featMemo(dir)(Tables.lineitem(s, dir).select(
+      col("l_orderkey"), col("l_linenumber"),
+      col("l_quantity").cast("double").as("l_quantity"),
+      col("l_extendedprice").cast("double").as("l_extendedprice"),
+      col("l_discount").cast("double").as("l_discount")))
 
-  private val kmeansMemo = graft.core.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[String, KMeansModel]())
+  private val kmeansMemo = graft.core.Memos.values[KMeansModel]()
   private def fittedKMeans(s: SparkSession, dir: String): KMeansModel =
-    kmeansMemo.computeIfAbsent(dir, _ =>
+    kmeansMemo(dir)(
       // r15: fan the single-row-group projection out before the MLlib
       // fit — every k-means|| init pass and Lloyd round ran as ONE task
       // (the r14 FanOut finding; ~30 single-core jobs profiled). The
@@ -98,10 +93,9 @@ object EstimatorQueries extends QueryPack {
     * generated oracle — see [[lloydFitOracle]]). Memo holds init + final
     * centers + sizes, a few dozen doubles.
     */
-  private val lloydMemo = graft.core.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[String, LloydFitResult]())
+  private val lloydMemo = graft.core.Memos.values[LloydFitResult]()
   private def lloydFit(s: SparkSession, dir: String): LloydFitResult =
-    lloydMemo.computeIfAbsent(dir, _ =>
+    lloydMemo(dir)(
       KMeans.fitLloydDeterministic(kmeansFeatures(s, dir),
         Seq("l_quantity", "l_extendedprice"),
         Seq("l_orderkey", "l_linenumber"), k = 3, maxIter = 40))
@@ -980,7 +974,7 @@ object EstimatorQueries extends QueryPack {
     */
   private def lloydFitOracle: Map[String, String] = {
     import scala.jdk.CollectionConverters._
-    lloydMemo.values.asScala.toList match {
+    lloydMemo.values match {
       case f :: Nil => Map("q_kmeans_fit" -> lloydFitOracleSql(f.nIter))
       case _ => Map.empty
     }

@@ -69,17 +69,16 @@ object FanOut {
     * CONCURRENT stages — against a lazily-populated cache each branch
     * re-runs the shared scan/aggregation in parallel (2–8 duplicated
     * equal-length jobs in the profiles). One eager pass here, then
-    * every branch reads cached blocks. Registered with
-    * [[Memos.tracked]] so Bench's between-pass clearAll releases the
-    * storage; callers pass bounded frames (contingency cells, candidate
-    * pairs), never raw corpus rows.
+    * every branch reads cached blocks. Held by [[Memos.keep]] so
+    * Bench's between-pass clearAll releases the storage; callers pass
+    * bounded frames (contingency cells, candidate pairs), never raw
+    * corpus rows.
     */
   def shared(tag: String, df: DataFrame): DataFrame = {
     // streaming frames pass through (persist + count throw on them) —
     // the byKey guard, mirrored here (r15, ADVICE)
     if (df.isStreaming) return df
-    val p = Memos.tracked(tag,
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val p = Memos.keep(tag, df)
     p.count()
     p
   }

@@ -1,54 +1,125 @@
 package graft.core
 
-/** Registry of the driver-side fit/result memos behind the
-  * fit-once/gate-twice pattern (seeded KMeans fit, IVF quantizer,
-  * oracle-family minhash pairs, Lloyd-fit trajectory).
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.storage.StorageLevel
+
+/** The one owner of cached state behind the fit-once/gate-twice
+  * pattern (seeded KMeans fit, IVF quantizer, dedup pair lists, shared
+  * graph frames) and of the persisted intermediates operators hand
+  * off mid-plan.
   *
-  * Contract shared by every registered memo:
-  *  - keys are data-directory paths and the data under a dir is assumed
-  *    IMMUTABLE for the life of the JVM session (the Verify/Bench mains
-  *    read driver-generated parquet that never changes mid-run); a dir
-  *    whose contents changed would be served stale results;
-  *  - values are small driver-side summaries (center matrices, collected
-  *    pair lists) — never DataFrames or row data at corpus scale.
+  * Contract shared by every memo:
+  *  - keys are data-directory paths (optionally with a name prefix) and
+  *    the data under a dir is assumed IMMUTABLE for the life of the JVM
+  *    session (the Verify/Bench mains read driver-generated parquet
+  *    that never changes mid-run); a dir whose contents changed would
+  *    be served stale results;
+  *  - [[values]] memos hold small driver-side summaries (center
+  *    matrices, collected pair lists); [[frames]] memos hold bounded
+  *    persisted projections, never full corpus rows.
   *
-  * [[clearAll]] lets Bench drop every memo between repeat passes so each
-  * pass re-pays the real fit cost and per-query medians stay honest.
+  * [[clearAll]] drops every memo and unpersists every frame between
+  * repeat passes, so each pass re-pays the real fit cost and
+  * per-query medians stay honest.
   */
 object Memos {
-  private val maps =
-    new java.util.concurrent.CopyOnWriteArrayList[java.util.Map[_, _]]()
 
-  /** Register a memo map at construction; returns it for inline use. */
-  def register[M <: java.util.Map[_, _]](m: M): M = { maps.add(m); m }
-
-  def clearAll(): Unit = maps.forEach(_.clear())
-
-  /** Memo of PERSISTED projection frames — the one sanctioned exception
-    * to the "never DataFrames" rule: values must be bounded projections
-    * (a few numeric columns per row, e.g. the k-means feature frame),
-    * never full corpus rows. clear() unpersists before dropping entries
-    * so Bench's between-pass [[clearAll]] releases executor storage
-    * along with the driver references.
+  /** Build-once cache keyed by string. Each key gets its own cell and
+    * the build runs under that cell's lock, not under the map's bin
+    * lock: a builder may call any memo, its own included (for another
+    * key); concurrent first calls for one key build once; a build
+    * that throws leaves no entry, so the next call builds again.
     */
-  final class CachedFrameMap
-      extends java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.DataFrame] {
-    override def clear(): Unit = {
-      values().forEach(df => df.unpersist(blocking = false))
-      super.clear()
+  final class Memo[V] private[Memos] (onBuild: V => V, release: V => Unit) {
+    private final class Cell {
+      @volatile var value: Option[V] = None
+      var dead = false
+      var builder: Thread = null
     }
+    private val cells = new ConcurrentHashMap[String, Cell]()
+
+    @annotation.tailrec
+    def apply(key: String)(build: => V): V = {
+      val cell = cells.computeIfAbsent(key, _ => new Cell)
+      val got = cell.synchronized {
+        if (cell.builder eq Thread.currentThread)
+          throw new IllegalStateException(s"memo key '$key' requested by its own build")
+        if (cell.dead) None
+        else cell.value.orElse {
+          cell.builder = Thread.currentThread
+          try {
+            cell.value = Some(onBuild(build))
+            cell.value
+          } catch {
+            case e: Throwable =>
+              cell.dead = true
+              cells.remove(key, cell)
+              throw e
+          } finally cell.builder = null
+        }
+      }
+      // None: the cell died (failed build or clear) while we waited
+      got match {
+        case Some(v) => v
+        case None => apply(key)(build)
+      }
+    }
+
+    /** Every value built so far (oracle generation reads them back). */
+    def values: List[V] = cells.values.asScala.flatMap(_.value).toList
+
+    private[Memos] def clear(): Unit =
+      cells.keySet.asScala.toList.foreach { k =>
+        val cell = cells.remove(k)
+        // waits for an in-flight build, then releases what it built
+        if (cell != null) cell.synchronized {
+          cell.dead = true
+          cell.value.foreach(release)
+          cell.value = None
+        }
+      }
   }
 
-  /** Shared registry for fire-and-forget persisted intermediates:
-    * operators persist a bounded projection mid-plan and hand it here
-    * so [[clearAll]] releases the executor storage; the key (prefix +
-    * global sequence) is never looked up again. One registry instead
-    * of a copy-pasted cache/AtomicLong/track triple per operator.
+  private val memos = new ConcurrentLinkedQueue[Memo[_]]()
+  private val kept = new ConcurrentLinkedQueue[(String, DataFrame)]()
+
+  private def registered[V](m: Memo[V]): Memo[V] = { memos.add(m); m }
+
+  private def persisted(df: DataFrame): DataFrame =
+    df.persist(StorageLevel.MEMORY_AND_DISK)
+
+  /** A memo of driver-side values. */
+  def values[V](): Memo[V] = registered(new Memo[V](identity, _ => ()))
+
+  /** A memo of frames: each built frame is persisted, materialized by
+    * one count (so every later plan reads the cached blocks), and
+    * unpersisted by [[clearAll]].
     */
-  private lazy val trackedFrames = register(new CachedFrameMap)
-  private val trackedSeq = new java.util.concurrent.atomic.AtomicLong()
-  def tracked(prefix: String, df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    trackedFrames.put(s"$prefix-${trackedSeq.incrementAndGet()}", df)
-    df
+  def frames(): Memo[DataFrame] = registered(new Memo[DataFrame](
+    df => { val p = persisted(df); p.count(); p },
+    _.unpersist(blocking = false)))
+
+  /** Persist `df` (lazily: the first action fills the cache) and hold
+    * it until [[clearAll]] unpersists it. For intermediates an operator
+    * builds and reads several times but never looks up again; `tag`
+    * names the operator that kept it.
+    */
+  def keep(tag: String, df: DataFrame): DataFrame = {
+    val p = persisted(df)
+    kept.add(tag -> p)
+    p
+  }
+
+  def clearAll(): Unit = {
+    memos.forEach(_.clear())
+    var k = kept.poll()
+    while (k != null) {
+      k._2.unpersist(blocking = false)
+      k = kept.poll()
+    }
   }
 }

@@ -39,13 +39,12 @@ object TextFeatureQueries extends QueryPack {
     * SAME synthesized clone corpus and the same dHash + Hamming band
     * join — before round 11 whichever gate ran first paid the pair
     * construction, swinging per-query bench numbers ~3× with gate
-    * order. The v5Packed convention: build once per dir, persist,
-    * materialize, cleared by Memos between bench passes.
+    * order. A [[graft.core.Memos.frames]] memo: built, persisted and
+    * materialized once per dir, released between bench passes.
     */
-  private val phashPairsMemo =
-    graft.core.Memos.register(new graft.core.Memos.CachedFrameMap())
+  private val phashPairsMemo = graft.core.Memos.frames()
   private def phashPairs(s: SparkSession, dir: String): DataFrame =
-    phashPairsMemo.computeIfAbsent(dir, _ => {
+    phashPairsMemo(dir) {
       val docs = Tables.documents(s, dir)
         .filter(octet_length(col("text")) === length(col("text")))
       val base = docs.select(col("doc_id"), col("text"))
@@ -54,11 +53,8 @@ object TextFeatureQueries extends QueryPack {
           concat(lit("xxxxx"), substring(col("text"), 6, Int.MaxValue))
             .as("text"))
       val media = Multimodal.binarize(base.union(clones), "text", "image")
-      val p = Multimodal.nearDuplicateMedia(media, "doc_id")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      p.count() // materialize so both gate plans see the cache
-      p
-    })
+      Multimodal.nearDuplicateMedia(media, "doc_id")
+    }
 
   /** murmur3 bucket of each probe word under MLlib HashingTF. */
   private[featureextraction] lazy val hashingTfBuckets: Map[String, Int] = {

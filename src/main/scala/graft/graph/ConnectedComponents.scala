@@ -2,7 +2,8 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.core.Memos
 
 /** Connected components by alternating large-star / small-star
   * (Kiveris, Lattanzi, Mirrokni, Rastogi, Vassilvitskii — "Connected
@@ -38,19 +39,14 @@ import org.apache.spark.storage.StorageLevel
   */
 object ConnectedComponents {
 
-  private def track(df: DataFrame): DataFrame =
-    graft.core.Memos.tracked("cc", df)
-
   /** @param pairs columns id_a, id_b (integral); undirected, dupes and
     *   self-loops tolerated.
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 30): DataFrame = {
-    val nodes = pairs
+    val nodes = Memos.keep("cc", pairs
       .select(explode(array(col("id_a").cast("long"),
         col("id_b").cast("long"))).as("id"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    track(nodes)
+      .distinct())
 
     var e = pairs
       .select(col("id_a").cast("long").as("src"),

@@ -88,12 +88,8 @@ object DeltaStepping {
     val e = edges.select(col(srcCol).cast("long").as("__s"),
       col(dstCol).cast("long").as("__t"),
       col(lenCol).cast("long").as("__l"))
-    val light = e.filter(col("__l") <= delta)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val heavy = e.filter(col("__l") > delta)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Memos.tracked("dstep", light)
-    graft.core.Memos.tracked("dstep", heavy)
+    val light = graft.core.Memos.keep("dstep", e.filter(col("__l") <= delta))
+    val heavy = graft.core.Memos.keep("dstep", e.filter(col("__l") > delta))
     val nodes = e.select(col("__s").as("__n"))
       .union(e.select(col("__t").as("__n"))).distinct()
     val seedIds = seeds.select(col(seeds.columns.head).cast("long")

@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   *    straight off the per-__s row counts.
   *
   * Callers that serve several gates should persist the result once
-  * (via [[graft.core.Memos.tracked]] or a per-dir memo) and hand it to
+  * (via [[graft.core.Memos.keep]] or a [[graft.core.Memos.frames]] memo) and hand it to
   * the algorithms' `…On` variants.
   */
 object EdgeFrames {

@@ -29,11 +29,10 @@ object AnnQueries extends QueryPack {
     * assume the dir's data is immutable for the JVM session; Bench
     * clears it between passes.
     */
-  private val ivfMemo = graft.core.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Double]]]())
+  private val ivfMemo = graft.core.Memos.values[Array[Array[Double]]]()
   private def trainedIvfCentroids(s: SparkSession, dir: String): Array[Array[Double]] =
-    ivfMemo.computeIfAbsent(dir, d =>
-      Ann.ivfIndex(Tables.embeddings(s, d), "embedding", nList = 8, dim = 64,
+    ivfMemo(dir)(
+      Ann.ivfIndex(Tables.embeddings(s, dir), "embedding", nList = 8, dim = 64,
         sampleSize = 2000, iters = 5, seed = 42))
 
   /** q_ann_pq's product-quantization codebooks: trained once per data
@@ -41,22 +40,19 @@ object AnnQueries extends QueryPack {
     * (m·ksub·dsub doubles — driver-tiny). Same dir-immutability
     * contract; Bench clears between passes.
     */
-  private val pqMemo = graft.core.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Array[Double]]]]())
+  private val pqMemo = graft.core.Memos.values[Array[Array[Array[Double]]]]()
   private def trainedPqCodebooks(s: SparkSession, dir: String): Array[Array[Array[Double]]] =
-    pqMemo.computeIfAbsent(dir, d =>
-      Ann.pqTrain(Tables.embeddings(s, d), "embedding", m = 8, ksub = 16,
+    pqMemo(dir)(
+      Ann.pqTrain(Tables.embeddings(s, dir), "embedding", m = 8, ksub = 16,
         dim = 64, sampleSize = 2000, iters = 5, seed = 42))
 
   /** q_ann_sq8's per-dimension quantization grid: one aggregate pass
     * per data dir (2·64 driver doubles). Same dir-immutability
     * contract; Bench clears between passes.
     */
-  private val sqMemo = graft.core.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[String, (Array[Double], Array[Double])]())
+  private val sqMemo = graft.core.Memos.values[(Array[Double], Array[Double])]()
   private def trainedSqGrid(s: SparkSession, dir: String): (Array[Double], Array[Double]) =
-    sqMemo.computeIfAbsent(dir, d =>
-      Ann.sqTrain(Tables.embeddings(s, d), "embedding", dim = 64))
+    sqMemo(dir)(Ann.sqTrain(Tables.embeddings(s, dir), "embedding", dim = 64))
 
 
   /** Generated IVF probe-search oracle for arbitrary literal centroids —
@@ -889,7 +885,7 @@ object AnnQueries extends QueryPack {
     */
   private def trainedIvfOracle: Map[String, String] = {
     import scala.jdk.CollectionConverters._
-    ivfMemo.values.asScala.toList match {
+    ivfMemo.values match {
       case centroids :: Nil => Map("q_ann_ivf" -> ivfOracleSql(centroids, nProbe = 3))
       case _ => Map.empty
     }
@@ -904,7 +900,7 @@ object AnnQueries extends QueryPack {
     */
   private def trainedPqOracle: Map[String, String] = {
     import scala.jdk.CollectionConverters._
-    pqMemo.values.asScala.toList match {
+    pqMemo.values match {
       case cbs :: Nil => Map(
         "q_ann_pq" -> pqOracleSql(cbs, k = 3),
         "q_ann_pq_rerank" -> pqRerankOracleSql(cbs, rerank = 20, k = 3))
@@ -921,7 +917,7 @@ object AnnQueries extends QueryPack {
     */
   private def trainedIvfPqOracle: Map[String, String] = {
     import scala.jdk.CollectionConverters._
-    (ivfMemo.values.asScala.toList, pqMemo.values.asScala.toList) match {
+    (ivfMemo.values, pqMemo.values) match {
       case (cents :: Nil, cbs :: Nil) =>
         Map("q_ann_ivfpq" -> ivfPqOracleSql(cents, cbs, nProbe = 3, k = 3),
           "q_ann_ingest" -> ingestOracleSql(cents, cbs))
@@ -1085,7 +1081,7 @@ object AnnQueries extends QueryPack {
     */
   private def trainedSqOracle: Map[String, String] = {
     import scala.jdk.CollectionConverters._
-    sqMemo.values.asScala.toList match {
+    sqMemo.values match {
       case (mins, scales) :: Nil => Map("q_ann_sq8" -> sqOracleSql(mins, scales, k = 3))
       case _ => Map.empty
     }

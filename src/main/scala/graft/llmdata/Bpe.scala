@@ -101,19 +101,14 @@ object Bpe {
     * embeddable as oracle VALUES at SQL-generation time.
     */
   val NumMerges = 48
-  private val bpeMemo = graft.core.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, String)]]())
+  private val bpeMemo = graft.core.Memos.values[Seq[(String, String)]]()
   def trained(s: SparkSession, dir: String): Seq[(String, String)] =
-    bpeMemo.computeIfAbsent(dir, d =>
-      train(Tables.documents(s, d), "text", numMerges = NumMerges))
+    bpeMemo(dir)(train(Tables.documents(s, dir), "text", numMerges = NumMerges))
 
   /** The memoized tables (for oracle generation — emitted only when
     * exactly one dir has trained, i.e. a Verify run).
     */
-  def memoized: List[Seq[(String, String)]] = {
-    import scala.jdk.CollectionConverters._
-    bpeMemo.values.asScala.toList
-  }
+  def memoized: List[Seq[(String, String)]] = bpeMemo.values
 
   def countExpr(text: Column, merges: Seq[(String, String)]): Column =
     BpeTokenCount(text, merges)

@@ -40,16 +40,11 @@ object ByteBpe {
     * deterministic function of the dir, embeddable as oracle VALUES).
     */
   val NumMerges = 48
-  private val memo = graft.core.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, String)]]())
+  private val memo = graft.core.Memos.values[Seq[(String, String)]]()
   def trained(s: SparkSession, dir: String): Seq[(String, String)] =
-    memo.computeIfAbsent(dir, d =>
-      train(Tables.documents(s, d), "text", numMerges = NumMerges))
+    memo(dir)(train(Tables.documents(s, dir), "text", numMerges = NumMerges))
 
-  def memoized: List[Seq[(String, String)]] = {
-    import scala.jdk.CollectionConverters._
-    memo.values.asScala.toList
-  }
+  def memoized: List[Seq[(String, String)]] = memo.values
 
   def encodeExpr(text: Column, merges: Seq[(String, String)]): Column =
     ByteBpeEncode(text, merges)

@@ -957,25 +957,18 @@ object Dedup {
     val wRun = Window.partitionBy(idCol).orderBy("p")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val prevEnd = max(col("p") + k).over(wPrev)
-    val spans = marked
+    // held until Memos.clearAll (Bench between-pass hygiene, or any caller)
+    val spans = graft.core.Memos.keep("spans", marked
       .withColumn("__new", when(prevEnd.isNull || col("p") > prevEnd, 1)
         .otherwise(0))
       .withColumn("__island", sum(col("__new")).over(wRun))
       .groupBy(col(idCol), col("__island"))
       .agg(min(col("p")).as("span_start"), (max(col("p")) + k).as("span_end"))
-      .drop("__island")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .drop("__island"))
     spans.count() // materialize the (bounded, merged) span set ...
     grams.unpersist(blocking = false) // ... then release the anchor cache
-    // The span cache is session-lived but registered, so Memos.clearAll
-    // (Bench between-pass hygiene, or any caller) releases it.
-    spanCache.put(s"spans-${spanCacheSeq.incrementAndGet()}", spans)
     spans
   }
-
-  private val spanCache =
-    graft.core.Memos.register(new graft.core.Memos.CachedFrameMap())
-  private val spanCacheSeq = new java.util.concurrent.atomic.AtomicLong()
 
   /** Per-document summary of [[exactSubstrSpans]]: span count, duplicated
     * char total, duplicated fraction of the document. Every input doc

@@ -1,7 +1,9 @@
 package graft.llmdata
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType,
+  StructField, StructType}
 
 import graft.core.{QueryPack, Tables}
 
@@ -19,107 +21,61 @@ import graft.core.{QueryPack, Tables}
 object DedupQueries extends QueryPack {
 
 
-  /** q_dedup_minhash and q_drop_near_dups gate the SAME oracle-family
-    * pipeline (k=8 / rowsPerBand=2 / 3-gram shingles, md5-per-seed):
-    * run it once per data dir and gate twice — the fit-once/gate-twice
-    * memo the KMeans gates use. The memo holds only the collected
-    * verified pairs (bounded by the near-dup count at gate SF), never
-    * data or a DataFrame. Registered with [[graft.core.Memos]]: keys
-    * assume the dir's data is immutable for the JVM session; Bench
-    * clears it between passes.
+  /** Verified pair lists, collected once per (pipeline, dir) and served
+    * to every later gate from the memo: the Dedup builders hand back a
+    * persisted frame the CALLER owns, so the build collects the small
+    * verified pair list (bounded by the near-dup count at gate SF) and
+    * unpersists the frame at once. The memo holds only (id_a, id_b,
+    * score) triples, never data; Bench clears it between passes.
     */
-  private val oraclePairsMemo = graft.core.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[String, Array[(Long, Long, Double)]]())
-  private[llmdata] def oracleMinhashPairs(s: SparkSession, dir: String): DataFrame = {
-    val rows = oraclePairsMemo.computeIfAbsent(dir, d => {
-      val p = Dedup.minhashNearDupPairs(Tables.documents(s, d), "text", "doc_id",
+  private val pairMemo = graft.core.Memos.values[Array[Row]]()
+  private def collectedPairs(s: SparkSession, key: String, score: String,
+      scoreType: DataType = DoubleType)(build: => DataFrame): DataFrame = {
+    val rows = pairMemo(key) {
+      val p = build
+      try p.select(col("id_a"), col("id_b"), col(score).cast(scoreType)).collect()
+      finally p.unpersist(blocking = false)
+    }
+    s.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(Seq(
+      StructField("id_a", LongType, nullable = false),
+      StructField("id_b", LongType, nullable = false),
+      StructField(score, scoreType, nullable = false))))
+  }
+
+  /** q_dedup_minhash and q_drop_near_dups (and the cluster, split and
+    * blocking gates) grade the SAME oracle-family pipeline (k=8 /
+    * rowsPerBand=2 / 3-gram shingles, md5-per-seed): run once per dir.
+    */
+  private[llmdata] def oracleMinhashPairs(s: SparkSession, dir: String): DataFrame =
+    collectedPairs(s, s"oracle:$dir", "jaccard")(
+      Dedup.minhashNearDupPairs(Tables.documents(s, dir), "text", "doc_id",
         threshold = 0.8, k = 8, rowsPerBand = 2, shingleN = 3,
-        oracleCompatible = true)
-      val out = p.select("id_a", "id_b", "jaccard").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      p.unpersist(blocking = false)
-      out
-    })
-    import s.implicits._
-    rows.toSeq.toDF("id_a", "id_b", "jaccard")
-  }
+        oracleCompatible = true))
 
-  /** q_dedup_jaccard's exact PPJoin pairs, collected-and-released per
-    * dir (the [[oracleMinhashPairs]] pattern): the builder hands back a
-    * persisted frame the CALLER owns — collect the small verified pair
-    * list, unpersist immediately, and serve later gates from the memo.
-    * Registered with [[graft.core.Memos]] under the same dir-immutable
-    * contract.
-    */
-  private val jaccardPairsMemo = graft.core.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[String, Array[(Long, Long, Double)]]())
-  private def exactJaccardPairs(s: SparkSession, dir: String): DataFrame = {
-    val rows = jaccardPairsMemo.computeIfAbsent(dir, d => {
-      val p = Dedup.jaccardNearDupPairs(Tables.documents(s, d), "text", "doc_id",
-        threshold = 0.8, shingleN = 3)
-      val out = p.select("id_a", "id_b", "jaccard").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      p.unpersist(blocking = false)
-      out
-    })
-    import s.implicits._
-    rows.toSeq.toDF("id_a", "id_b", "jaccard")
-  }
+  /** q_dedup_jaccard's exact PPJoin pairs. */
+  private def exactJaccardPairs(s: SparkSession, dir: String): DataFrame =
+    collectedPairs(s, s"jaccard:$dir", "jaccard")(
+      Dedup.jaccardNearDupPairs(Tables.documents(s, dir), "text", "doc_id",
+        threshold = 0.8, shingleN = 3))
 
-  /** q_dedup_containment's exact directed pairs, collected-and-released
-    * per dir (the [[exactJaccardPairs]] pattern).
-    */
-  private val containmentPairsMemo = graft.core.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[String, Array[(Long, Long, Double)]]())
-  private def exactContainmentPairs(s: SparkSession, dir: String): DataFrame = {
-    val rows = containmentPairsMemo.computeIfAbsent(dir, d => {
-      val p = Dedup.containmentPairs(Tables.documents(s, d), "text", "doc_id",
-        threshold = 0.8, shingleN = 3)
-      val out = p.select("id_a", "id_b", "containment").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      p.unpersist(blocking = false)
-      out
-    })
-    import s.implicits._
-    rows.toSeq.toDF("id_a", "id_b", "containment")
-  }
+  /** q_dedup_containment's exact directed pairs. */
+  private def exactContainmentPairs(s: SparkSession, dir: String): DataFrame =
+    collectedPairs(s, s"containment:$dir", "containment")(
+      Dedup.containmentPairs(Tables.documents(s, dir), "text", "doc_id",
+        threshold = 0.8, shingleN = 3))
 
-  /** Same collect-and-unpersist hygiene for the PRODUCTION-family
-    * minhash pipeline (k=64/rowsPerBand=4, cheap mixes) — the builders
-    * hand the caller a persisted frame; without this, every Verify/Bench
-    * invocation of the query leaked one cached result set.
-    */
-  private val defaultPairsMemo = graft.core.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[String, Array[(Long, Long, Double)]]())
-  private def defaultMinhashPairs(s: SparkSession, dir: String): DataFrame = {
-    val rows = defaultPairsMemo.computeIfAbsent(dir, d => {
-      val p = Dedup.minhashNearDupPairs(Tables.documents(s, d), "text", "doc_id",
-        threshold = 0.8)
-      val out = p.select("id_a", "id_b", "jaccard").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      p.unpersist(blocking = false)
-      out
-    })
-    import s.implicits._
-    rows.toSeq.toDF("id_a", "id_b", "jaccard")
-  }
+  /** The PRODUCTION-family minhash pipeline (k=64/rowsPerBand=4, cheap
+    * mixes). */
+  private def defaultMinhashPairs(s: SparkSession, dir: String): DataFrame =
+    collectedPairs(s, s"default:$dir", "jaccard")(
+      Dedup.minhashNearDupPairs(Tables.documents(s, dir), "text", "doc_id",
+        threshold = 0.8))
 
-  /** And for the simhash pigeonhole pipeline (hamming ≤ 3). */
-  private val simhashPairsMemo = graft.core.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[String, Array[(Long, Long, Int)]]())
-  private def simhashPairs(s: SparkSession, dir: String): DataFrame = {
-    val rows = simhashPairsMemo.computeIfAbsent(dir, d => {
-      val p = Dedup.simhashNearDupPairs(Tables.documents(s, d), "text", "doc_id",
-        maxHamming = 3)
-      val out = p.select("id_a", "id_b", "hamming").collect()
-        .map(r => (r.getLong(0), r.getLong(1),
-          r.getAs[Number]("hamming").intValue))
-      p.unpersist(blocking = false)
-      out
-    })
-    import s.implicits._
-    rows.toSeq.toDF("id_a", "id_b", "hamming")
-  }
+  /** The simhash pigeonhole pipeline (hamming ≤ 3). */
+  private def simhashPairs(s: SparkSession, dir: String): DataFrame =
+    collectedPairs(s, s"simhash:$dir", "hamming", IntegerType)(
+      Dedup.simhashNearDupPairs(Tables.documents(s, dir), "text", "doc_id",
+        maxHamming = 3))
 
 
   private[llmdata] val minhashPairCtes: String =

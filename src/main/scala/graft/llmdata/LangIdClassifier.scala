@@ -222,15 +222,10 @@ object LangIdClassifier {
   /** Per-dir trained model memo (the trained-index pattern: queries
     * run first and populate it; oracle generation reads it back).
     */
-  private val memo = graft.core.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, Array[Double], Double)]]())
+  private val memo = graft.core.Memos.values[Seq[(String, Array[Double], Double)]]()
   def trained(s: SparkSession, dir: String): Seq[(String, Array[Double], Double)] =
-    memo.computeIfAbsent(dir, d =>
-      train(Tables.documents(s, d), "text", "doc_id", "lang"))
-  def memoized: List[Seq[(String, Array[Double], Double)]] = {
-    import scala.jdk.CollectionConverters._
-    memo.values.asScala.toList
-  }
+    memo(dir)(train(Tables.documents(s, dir), "text", "doc_id", "lang"))
+  def memoized: List[Seq[(String, Array[Double], Double)]] = memo.values
 
   /** DuckDB CTE block ending in `lpred(doc_id, pred_lang)`: weights and
     * intercepts as VALUES keyed by class rank, the house md5 bucket,

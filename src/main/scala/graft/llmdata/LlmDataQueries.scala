@@ -19,50 +19,41 @@ object LlmDataQueries extends QueryPack {
   private val pipelineMixTargets: Map[String, Double] = Map(
     "en" -> 0.4, "de" -> 0.2, "fr" -> 0.2, "es" -> 0.1, "zh" -> 0.1)
 
-  /** The v5 flagship's packed output, built once per dir and persisted
-    * (fit-once/gate-twice convention — q_llm_pipeline_v5 orders it,
-    * q_llm_pipeline_v6 aggregates it into shard manifests; without the
-    * memo v6 would re-run the entire five-stage pipeline). Cleared by
-    * Memos.clearAll between Bench passes.
+  /** Per-dir persisted frames shared by several gates, each built,
+    * persisted and counted once (so every gate plan reads the cache)
+    * and released by Memos.clearAll between Bench passes:
+    *  - `neyman:` the Neyman allocation — the allocation gate orders
+    *    it, the sample gate joins against it (and collects its max to
+    *    size the top-k heap), both reading the cached |strata|-row
+    *    frame instead of racing one gate's eager persist against the
+    *    other's plan build;
+    *  - `dsir:` DSIR importance weights (n_grams, logw per doc) — the
+    *    identical ratios+weights computation fed q_dsir_weights,
+    *    q_dsir_sample AND the v5 pipeline's selection stage (r14).
     */
-  /** Neyman allocation fit once per dir and persisted: the allocation
-    * gate orders it, the sample gate joins against it (and collects
-    * its max to size the top-k heap) — both plans deterministically
-    * read the cached |strata|-row frame instead of racing one gate's
-    * eager persist against the other's plan build.
-    */
-  private val neymanMemo =
-    graft.core.Memos.register(new graft.core.Memos.CachedFrameMap())
+  private val frameMemo = graft.core.Memos.frames()
   private def neymanAllocMemo(s: SparkSession, dir: String): DataFrame =
-    neymanMemo.computeIfAbsent(dir, d => {
-      val a = Splits.neymanAllocation(Tables.documents(s, d), "source",
-          "n_chars", k = 200)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      a.count() // materialize so both gate plans see the cache
-      a
-    })
+    frameMemo(s"neyman:$dir")(Splits.neymanAllocation(
+      Tables.documents(s, dir), "source", "n_chars", k = 200))
 
-  /** Per-dir DSIR importance weights (n_grams, logw per doc) — the
-    * identical ratios+weights computation fed q_dsir_weights,
-    * q_dsir_sample AND the v5 pipeline's selection stage; fit-once
-    * memo (r14 optimization, the neymanAllocMemo convention). */
-  private val dsirMemo =
-    graft.core.Memos.register(new graft.core.Memos.CachedFrameMap())
   private def dsirWeightsMemo(s: SparkSession, dir: String): DataFrame =
-    dsirMemo.computeIfAbsent(dir, _ => {
+    frameMemo(s"dsir:$dir") {
       val docs = Tables.documents(s, dir)
       val ratios = Dsir.bucketLogRatios(
         docs.filter(col("lang") === "en"), docs, "text")
-      val w = Dsir.importanceWeights(docs, "text", "doc_id", ratios)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      w.count()
-      w
-    })
+      Dsir.importanceWeights(docs, "text", "doc_id", ratios)
+    }
 
-  private val v5Memo =
-    graft.core.Memos.register(new graft.core.Memos.CachedFrameMap())
+  /** The v5 flagship's packed output, built once per dir and persisted
+    * (fit-once/gate-twice convention — q_llm_pipeline_v5 orders it,
+    * q_llm_pipeline_v6 aggregates it into shard manifests; without the
+    * memo v6 would re-run the entire five-stage pipeline). Kept lazily:
+    * the first gate's own action fills the cache. Released by
+    * Memos.clearAll between Bench passes.
+    */
+  private val v5Memo = graft.core.Memos.values[DataFrame]()
   private def v5Packed(s: SparkSession, dir: String): DataFrame =
-    v5Memo.computeIfAbsent(dir, _ => {
+    v5Memo(dir) {
       val t = col("text")
       val (wts, b) = QualityClassifier.trained(s, dir)
       val margin = QualityClassifier.marginExpr(t, wts, b)
@@ -104,7 +95,7 @@ object LlmDataQueries extends QueryPack {
         salt = "mix5")
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("source")).orderBy(col("doc_id"))
-      sampled
+      graft.core.Memos.keep("v5", sampled
         .withColumn("__cum", sum(col("n_tokens")).over(w))
         .withColumn("pack_id",
           floor((col("__cum") - col("n_tokens")) / lit(512)).cast("int"))
@@ -112,9 +103,8 @@ object LlmDataQueries extends QueryPack {
           round(col("p_quality"), 6).as("p_quality"),
           round(col("nll"), 6).as("nll"),
           round(col("logw"), 6).as("logw"), col("n_tokens"),
-          col("pack_id"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+          col("pack_id")))
+    }
 
   /** Shared BM25 term set and oracle CTE block (q_bm25, q_bm25_topk):
     * `bm(doc_id, lang, dl, bm25)` with the score already rounded to 6.

@@ -80,16 +80,11 @@ object QualityClassifier {
     * are a deterministic function of the dir, embeddable as oracle
     * VALUES at SQL-generation time.
     */
-  private val qcMemo = graft.core.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[String, (Array[Double], Double)]())
+  private val qcMemo = graft.core.Memos.values[(Array[Double], Double)]()
   def trained(s: SparkSession, dir: String): (Array[Double], Double) =
-    qcMemo.computeIfAbsent(dir, d =>
-      train(Tables.documents(s, d), "text", "doc_id"))
+    qcMemo(dir)(train(Tables.documents(s, dir), "text", "doc_id"))
 
-  def memoized: List[(Array[Double], Double)] = {
-    import scala.jdk.CollectionConverters._
-    qcMemo.values.asScala.toList
-  }
+  def memoized: List[(Array[Double], Double)] = qcMemo.values
 
   /** Margin column (w·x + b) — scan-fused, weights in-plan. */
   def marginExpr(text: Column, weights: Array[Double], intercept: Double): Column =

@@ -196,32 +196,22 @@ object Unigram {
     * the [[Bpe.trained]] pattern: deterministic function of the dir,
     * memoized for the JVM session, embeddable as oracle VALUES.
     */
-  private val uniMemo = graft.core.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[String, UnigramModel]())
+  private val uniMemo = graft.core.Memos.values[UnigramModel]()
   def trained(s: SparkSession, dir: String): UnigramModel =
-    uniMemo.computeIfAbsent(dir, d =>
-      train(Tables.documents(s, d), "text"))
+    uniMemo(dir)(train(Tables.documents(s, dir), "text"))
 
-  def memoized: List[UnigramModel] = {
-    import scala.jdk.CollectionConverters._
-    uniMemo.values.asScala.toList
-  }
+  def memoized: List[UnigramModel] = uniMemo.values
 
   /** English-only-trained variant (the coverage-gap probe: a tokenizer
     * trained on one language is evaluated for out-of-vocabulary rate
     * on every other — q_tokenizer_coverage). Same memo contract.
     */
-  private val uniEnMemo = graft.core.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[String, UnigramModel]())
+  private val uniEnMemo = graft.core.Memos.values[UnigramModel]()
   def trainedEn(s: SparkSession, dir: String): UnigramModel =
-    uniEnMemo.computeIfAbsent(dir, d =>
-      train(Tables.documents(s, d)
-        .filter(col("lang") === "en"), "text"))
+    uniEnMemo(dir)(train(Tables.documents(s, dir)
+      .filter(col("lang") === "en"), "text"))
 
-  def memoizedEn: List[UnigramModel] = {
-    import scala.jdk.CollectionConverters._
-    uniEnMemo.values.asScala.toList
-  }
+  def memoizedEn: List[UnigramModel] = uniEnMemo.values
 
   def encodeExpr(text: Column, model: UnigramModel): Column =
     UnigramEncode(text, model)

@@ -134,16 +134,11 @@ object WordPiece {
     * [[Bpe.trained]] pattern: deterministic function of the dir,
     * memoized for the JVM session, embeddable as oracle VALUES.
     */
-  private val wpMemo = graft.core.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[String, WordPieceModel]())
+  private val wpMemo = graft.core.Memos.values[WordPieceModel]()
   def trained(s: SparkSession, dir: String): WordPieceModel =
-    wpMemo.computeIfAbsent(dir, d =>
-      train(Tables.documents(s, d), "text"))
+    wpMemo(dir)(train(Tables.documents(s, dir), "text"))
 
-  def memoized: List[WordPieceModel] = {
-    import scala.jdk.CollectionConverters._
-    wpMemo.values.asScala.toList
-  }
+  def memoized: List[WordPieceModel] = wpMemo.values
 
   def encodeExpr(text: Column, model: WordPieceModel): Column =
     WordPieceEncode(text, model)

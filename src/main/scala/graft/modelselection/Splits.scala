@@ -23,17 +23,23 @@ object Splits {
 
   /** The indexed frame plus the total count — the count comes free from
     * the per-partition counts job, so callers needing both (withFold)
-    * scan the source once for them instead of twice.
+    * scan the source once for them instead of twice — and the thunk
+    * that releases the source RDD persisted for a shuffled input.
     */
-  private def indexAndCount(df: DataFrame, indexCol: String): (DataFrame, Long) = {
+  private def indexAndCount(df: DataFrame,
+      indexCol: String): (DataFrame, Long, () => Unit) = {
     val spark = df.sparkSession
     // the idiom runs TWO jobs over the same partitions (counts, then
     // index). For a raw scan, re-reading is cheaper than caching; but if
     // the plan contains a shuffle-producing operator (join/agg/window/
     // repartition), persist so (a) the expensive upstream computes once
     // and (b) both jobs see identical partition contents even when the
-    // upstream ordering is nondeterministic. The cached RDD is released
-    // by Spark's ContextCleaner once unreferenced.
+    // upstream ordering is nondeterministic. The indexed frame reads that
+    // RDD on every action, so only a caller that has materialized its own
+    // copy may release it ([[kfoldCached]]); withRowIndex and withFold
+    // leave it to Spark's ContextCleaner, which frees it only after the
+    // driver GC collects the RDD, and never with
+    // spark.cleaner.referenceTracking off.
     val shuffled = df.queryExecution.optimizedPlan.collectFirst {
       case p if Seq("Join", "Aggregate", "Window", "Repartition", "Sort")
         .exists(p.nodeName.contains) => p
@@ -51,7 +57,8 @@ object Splits {
     }
     (spark.createDataFrame(indexed,
       StructType(df.schema.fields :+ StructField(indexCol, LongType, nullable = false))),
-      offsets.last)
+      offsets.last,
+      () => if (shuffled) rdd.unpersist(blocking = false))
   }
 
   /** Ref: dask_ml.model_selection.train_test_split (_split.py:361-520).
@@ -109,10 +116,15 @@ object Splits {
     * ranges. Returns the df with a fold column; use [[kfold]] for the
     * (train, test) pairs.
     */
-  def withFold(df: DataFrame, k: Int, indexCol: String = "row_index"): DataFrame = {
+  def withFold(df: DataFrame, k: Int, indexCol: String = "row_index"): DataFrame =
+    foldAndRelease(df, k, indexCol)._1
+
+  /** [[withFold]] plus the release thunk of [[indexAndCount]]. */
+  private def foldAndRelease(df: DataFrame, k: Int,
+      indexCol: String): (DataFrame, () => Unit) = {
     // one source scan supplies both the index and the count
-    val (indexed, n) =
-      if (df.columns.contains(indexCol)) (df, df.count())
+    val (indexed, n, release) =
+      if (df.columns.contains(indexCol)) (df, df.count(), () => ())
       else indexAndCount(df, indexCol)
     require(n >= k, s"need at least k=$k rows, got $n")
     // contiguous fold ranges like sklearn: first n % k folds get one extra
@@ -123,7 +135,7 @@ object Splits {
     val fold = when(col(indexCol) < boundary,
         expr(s"$indexCol div ${base + 1}").cast("int"))
       .otherwise(expr(s"($indexCol - $boundary) div $base").cast("int") + extra.toInt)
-    indexed.withColumn("fold", fold)
+    (indexed.withColumn("fold", fold), release)
   }
 
   /** Group-aware fold assignment (sklearn GroupKFold's contract — "the
@@ -214,18 +226,20 @@ object Splits {
   /** kfold over a CACHED fold assignment (the cache_cv analog): the
     * folded frame is persisted and materialized once, every derived
     * train/test filter scans the cache, and the returned cleanup
-    * unpersists it — callers (the CV searches) own the lifetime, so
-    * nothing leaks across repeated searches.
+    * unpersists it and the source RDD the row index persisted — callers
+    * (the CV searches) own the lifetime, so nothing leaks across
+    * repeated searches.
     */
   def kfoldCached(df: DataFrame, k: Int): (Seq[(DataFrame, DataFrame)], () => Unit) = {
-    val folded = withFold(df, k)
+    val (unpersisted, release) = foldAndRelease(df, k, "row_index")
+    val folded = unpersisted
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     folded.count() // materialize before fan-out
     val folds = (0 until k).map { f =>
       (folded.filter(col("fold") =!= f).drop("fold", "row_index"),
         folded.filter(col("fold") === f).drop("fold", "row_index"))
     }
-    (folds, () => { folded.unpersist(blocking = false); () })
+    (folds, () => { folded.unpersist(blocking = false); release() })
   }
 
   /** Deterministic content-hash sampling: keep a row iff
@@ -520,10 +534,9 @@ object Splits {
       valueCol: String, k: Int, salt: String = "neyman"): DataFrame = {
     // persisted: consumed by the bounded capMax collect AND the lazy
     // broadcast join — without it the corpus-sized stratum aggregate
-    // would run twice. Tracked so Bench's Memos.clearAll releases it.
-    val alloc = graft.core.Memos.tracked("neyman",
-      neymanAllocation(df, stratumCol, valueCol, k)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    // would run twice. Kept so Bench's Memos.clearAll releases it.
+    val alloc = graft.core.Memos.keep("neyman",
+      neymanAllocation(df, stratumCol, valueCol, k))
     neymanSampleFrom(df, stratumCol, idCol, alloc, salt)
   }
 

@@ -27,13 +27,12 @@ object PreprocessingQueries extends QueryPack {
   /** GBT fit memo (fit-once/gate-twice, Memos contract: driver-side
     * summaries only — the trajectory plus the ≤Π|bins| cell frame
     * collected as tuples). */
-  private val gbtMemo = graft.core.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[String,
-      (Seq[graft.ensemble.Boosting.BoostRound],
-        Seq[(Int, Int, Int, Long, Long, Long)])]())
+  private val gbtMemo = graft.core.Memos.values[
+    (Seq[graft.ensemble.Boosting.BoostRound],
+      Seq[(Int, Int, Int, Long, Long, Long)])]()
 
   private def gbtFit(s: SparkSession, dir: String) =
-    gbtMemo.computeIfAbsent(dir, _ => {
+    gbtMemo(dir) {
       val (traj, cells) = graft.ensemble.Boosting.fitBinned(
         Tables.lineitem(s, dir),
         Seq(
@@ -45,7 +44,7 @@ object PreprocessingQueries extends QueryPack {
         r.getAs[Int]("__b_ship_year"), r.getAs[Int]("__b_quantity_bucket"),
         r.getAs[Int]("__b_discount_pct"), r.getAs[Long]("n"),
         r.getAs[Long]("sy"), r.getAs[Long]("f_micro"))).toSeq)
-    })
+    }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

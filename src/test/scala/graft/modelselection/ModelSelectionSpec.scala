@@ -402,9 +402,12 @@ class ModelSelectionSpec extends SparkSpec {
   }
 
   test("kfoldCached: folds usable after cleanup (recompute, not crash)") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     val (folds, cleanup) = Splits.kfoldCached(orders.repartition(5), 3)
     assert(folds.map(_._2.count()).sum == orders.count())
     cleanup()
+    // the fold cache and the row index's persisted source both released
+    assert(spark.sparkContext.getPersistentRDDs.keySet.diff(before).isEmpty)
     assert(folds.head._1.count() + folds.head._2.count() == orders.count())
   }
 
